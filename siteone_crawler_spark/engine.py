@@ -11,16 +11,20 @@ shared DashMap state) as deterministic Spark dataflow. One wave =
         suitability filters                     crawler.rs:1055-1306)
       → anti-join seen (bloom + bucketed exact) (crawler.rs:1287-1297)
       → first-wins dedup + deterministic rank   (crawler.rs:1232-1242)
-      → caps → frontier(K+1), visited, skipped, events, metrics
+      → caps → frontier(K+1), visited, skipped, basename_events, metrics
       → checkpoint commit (atomic manifest bump)
 
 State tables (sources/checkpoint.py):
   frontier   append-only discovery log: ONE row per enqueued URL, wave =
-             discovery wave; doubles as the exact seen set and the order
-             source (seq is the global enqueue == dequeue sequence).
+             discovery wave; the order source (seq is the global enqueue ==
+             dequeue sequence) and the source of the seen set's keys.
   deferred   politeness-deferred pending rows, indexed by the wave that will
              process them (empty in parity mode).
-  visited / skipped / events / metrics / blooms  as named.
+  visited / skipped / basename_events / metrics / lineage  as named.
+The URL-seen set (operators/seen.py) keeps its own tables in the same store:
+the engine hands it each committed frontier wave (SeenSet.install for an
+external wave 0, SeenSet.commit_wave per wave, SeenSet.restore on resume),
+and SeenSet decides when its prefilter goes live and what it checkpoints.
 
 Crawl order parity: the reference's FIFO queue yields enqueue order ==
 dequeue order; we reproduce it by ranking each wave's accepted candidates by
@@ -34,8 +38,8 @@ Scale notes (local[32] here, 1000 executors in spirit):
     at-risk basename groups);
   - the wave rank avoids a single-partition window (operators/ordering.py);
   - seen-set dedup is prefiltered (bloom or deletable cuckoo arm,
-    config.seen_filter) so only maybe-seen candidates join
-    (operators/seen.py, operators/cuckoo.py);
+    config.seen_filter) once the set is large, so only maybe-seen
+    candidates join (operators/seen.py, operators/cuckoo.py);
   - every wave's state lands in the checkpoint store, so lineage is cut per
     wave (no ever-growing plan) and a killed run resumes bit-identically;
   - between crawls, invalidate(urls) re-queues already-crawled URLs through
@@ -62,14 +66,9 @@ from .config import (
     CrawlConfig,
 )
 from .functions.robots import compile_rules_map, is_allowed
-from .functions.urls import (
-    HTMLISH_EXTENSIONS,
-    canonicalize,
-    href_cheap_invalid_col,
-    make_resolve_udf,
-)
+from .functions.urls import HTMLISH_EXTENSIONS, canonicalize, make_resolve_udf
 from .operators.ordering import with_global_seq
-from .operators.seen import SeenSet, key_bucket
+from .operators.seen import SeenSet
 from .sources.checkpoint import CheckpointStore
 
 FRONTIER_SCHEMA = (
@@ -85,7 +84,6 @@ SKIPPED_SCHEMA = (
     "url string, url_key string, reason int, source_uq_id string, source_attr int, wave int,"
     " parent_seq long, offset int"
 )
-EVENTS_SCHEMA = "basename string, seq long"
 BN_STATE_SCHEMA = "basename string, evt_seqs array<bigint>, n_events long"
 METRICS_SCHEMA = "wave int, stage string, rows long"
 LINEAGE_SCHEMA = "wave int, table string, file string, n_rows long, n_bytes long"
@@ -171,7 +169,6 @@ class CrawlEngine:
         self._wave_caches: list[DataFrame] = []
         self._wave_seq_start: dict[int, int] = {}
         self._min_pending_seq: int | None = None
-        self._bloom_ready = False
         # basename-breaker state lives in a checkpointed Spark table
         # (basename string, evt_seqs array<bigint>, n_events long), NOT on
         # the driver: a 404 long tail of distinct failing basenames is
@@ -182,9 +179,6 @@ class CrawlEngine:
         # caches max(n_events) so no-trippable waves skip all breaker joins.
         self._bn_state: DataFrame | None = None
         self._bn_state_max = 0
-        # "auto" href-prefilter decision, resolved once on the first wave's
-        # candidates and held for the crawl (None = not yet probed)
-        self._href_prefilter_auto: bool | None = None
 
     # ------------------------------------------------------------------ run
     def run(
@@ -306,41 +300,15 @@ class CrawlEngine:
         columns, url_key distinct, seq pre-assigned 0..N-1). Used by the
         steady-state benchmark and by callers resuming from external state."""
         self.store.write_table("frontier", 0, frontier, max_files=32)
-        n = self.store.count_rows("frontier", 0)
-        self.store.write_table(
-            "seen",
-            0,
-            self.store.read_wave("frontier", 0, FRONTIER_SCHEMA)
-            .select("url_key")
-            .withColumn("bucket", key_bucket(F.col("url_key"), self.seen.n_buckets)),
-            max_files=32,
-            partition_by="bucket",
-        )
-        self.seen._keys = self.store.read_all_partitioned(
-            "seen", 0, "url_key string, bucket int", ["url_key", "bucket"]
-        )
+        self.n_enqueued = self.store.count_rows("frontier", 0)
         self._wave_seq_start[0] = 0
-        self.n_enqueued = n
-        if n >= self.seen.bloom_min_keys:
-            self._bloom_absorb(self.seen.keys, n)
+        self.seen.install(self.store, self.n_enqueued)
 
     def _restore_state(self, last_wave: int) -> None:
         # frontier rows discovered while processing last_wave live at index
         # last_wave+1 — they are already committed state (manifest bumped
         # after finalize), so the seen set must include them
-        if self.store.has_wave("seen", last_wave + 1):
-            keys = self.store.read_all_partitioned(
-                "seen", last_wave + 1, "url_key string, bucket int",
-                ["url_key", "bucket"],
-            )
-        else:  # pre-seen-table checkpoints: derive from the frontier log
-            keys = (
-                self.store.read_all("frontier", last_wave + 1, FRONTIER_SCHEMA)
-                .select("url_key")
-                .withColumn("bucket", key_bucket(F.col("url_key"), self.seen.n_buckets))
-            )
-        self.seen._keys = keys
-        self.n_enqueued = keys.count()
+        self.n_enqueued = self.seen.restore(self.store, last_wave + 1)
         self._wave_seq_start[last_wave + 1] = self.n_enqueued - self.store.count_rows(
             "frontier", last_wave + 1
         )
@@ -361,16 +329,6 @@ class CrawlEngine:
             )
         for w in range(w0 + 1, last_wave + 1):
             self._absorb_events(w)
-        bloom_rows = self.store.read_wave(
-            "blooms", last_wave + 1, "bucket int, bits binary"
-        ).collect()
-        if bloom_rows:
-            self.seen.restore_prefilter(
-                [(r["bucket"], r["bits"]) for r in bloom_rows]
-            )
-            self._bloom_ready = True
-        elif self.n_enqueued >= self.seen.bloom_min_keys:
-            self._bloom_absorb(keys, self.n_enqueued)
 
     def _pending(self, wave: int) -> DataFrame:
         newly = self.store.read_wave("frontier", wave, FRONTIER_SCHEMA)
@@ -633,40 +591,6 @@ class CrawlEngine:
         c = self._resolve_candidates(cand)
         return self._split_candidates(c, wave, events_agg)
 
-    def _href_prefilter_enabled(self, cand: DataFrame) -> bool:
-        """Resolve CrawlConfig.native_href_prefilter (False | True | "auto").
-
-        Auto mode measures instead of guessing: sample up to
-        href_prefilter_probe_rows hrefs from the first wave's candidates
-        (a bounded limit+aggregate — CollectLimit scans partitions
-        incrementally, so on BFS ramp-up waves this touches only the tiny
-        seed fan-out) and enable the native pre-filter for the WHOLE crawl
-        iff the invalid fraction exceeds href_prefilter_threshold. One
-        probe per crawl: the decision is corpus-shaped, not wave-shaped,
-        and holding it fixed keeps every wave's physical plan identical.
-        Toggling is always parity-safe — the predicate is a pure
-        short-circuit of the Python kernel (property-pinned).
-        """
-        mode = self.config.native_href_prefilter
-        if mode != "auto":
-            return bool(mode)
-        if self._href_prefilter_auto is None:
-            row = (
-                cand.select("href")
-                .limit(self.config.href_prefilter_probe_rows)
-                .agg(
-                    F.avg(
-                        href_cheap_invalid_col(F.col("href")).cast("double")
-                    ).alias("bad")
-                )
-                .first()
-            )
-            frac = row["bad"] or 0.0
-            self._href_prefilter_auto = bool(
-                frac >= self.config.href_prefilter_threshold
-            )
-        return self._href_prefilter_auto
-
     def _resolve_candidates(self, cand: DataFrame) -> DataFrame:
         """Resolve + event-independent predicate flags on ONE cached
         DataFrame, so the expensive upstream (fetch joins + resolve/robots
@@ -682,28 +606,6 @@ class CrawlEngine:
         # kernel — spread it across the executors first. The shuffle moves
         # only (base, href) strings and buys full-parallel UDF execution.
         c = cand.repartition(self.spark.sparkContext.defaultParallelism * 2)
-        if self._href_prefilter_enabled(cand):
-            # Real-web corpora run 5-50% mailto:/javascript:/fragment/
-            # template hrefs: drop DEFINITELY-invalid candidates natively so
-            # they never pay the Arrow exchange or the Python kernel. The
-            # predicate is the cheap string-ops under-approximation
-            # (href_cheap_invalid_col): it may only drop rows the kernel
-            # would drop (implication property-pinned), and anything it
-            # misses the kernel still rejects — never a semantic fork.
-            # History: the first version used the exact regex-chain replica
-            # (href_valid_col) and LOST 2.4-2.8x in every regime — ~58us/row
-            # charged to every candidate vs the few-us/row kernel rejection
-            # it saved. The OR-term below is always false
-            # (monotonically_increasing_id is non-negative) but
-            # NONDETERMINISTIC, which pins the filter above the exchange —
-            # PushDownPredicates otherwise moves it through Repartition onto
-            # the AQE-coalesced ~1-partition join output and it runs serial.
-            # "auto" probes the corpus with this same predicate instead of
-            # guessing (see _href_prefilter_enabled).
-            c = c.filter(
-                ~href_cheap_invalid_col(F.col("href"))
-                | (F.monotonically_increasing_id() < F.lit(0))
-            )
         c = c.withColumn("r", self._resolve(F.col("base"), F.col("href")))
         c = c.filter(F.col("r.valid"))  # P1/P2/P6 — invalid dropped silently
         # url_key/uq_id natively: Spark md5(str) is bit-identical to the
@@ -878,84 +780,14 @@ class CrawlEngine:
         n_new = self.store.count_rows("frontier", wave)  # footer read, no job
         _sub("frontier_write")
 
-        # seen-set table: (url_key, bucket) PARTITIONED BY bucket on disk —
-        # the exact anti-join side partition-prunes and never recomputes the
-        # bucket hash; derived from the just-written frontier parquet so its
-        # lineage is one file scan
-        def _write_seen():
-            self.store.write_table(
-                "seen",
-                wave,
-                self.store.read_wave("frontier", wave, FRONTIER_SCHEMA)
-                .select("url_key")
-                .withColumn("bucket", key_bucket(F.col("url_key"), self.seen.n_buckets)),
-                max_files=self._nfiles(n_cand),
-                partition_by="bucket",
-            )
-
         self._wave_seq_start[wave] = self.n_enqueued
         self.n_enqueued += n_new
-
-        # bloom maintenance only once the seen set is big enough to pay for
-        # it (below that, filter_new broadcast-anti-joins the exact keys);
-        # bitsets are built DISTRIBUTED per bucket, only blobs hit the driver.
-        # Steady-state (bloom already live): the wave's key slice comes from
-        # the just-written frontier parquet, independent of the seen write —
-        # the two run as CONCURRENT jobs, taking the bloom build out of the
-        # wave's serial tail (a constant cost that otherwise caps N-vs-4N
-        # scaling efficiency).
-        def _update_bloom():
-            src = self.store.read_wave("frontier", wave, FRONTIER_SCHEMA).select(
-                "url_key"
-            ).withColumn("bucket", key_bucket(F.col("url_key"), self.seen.n_buckets))
-            self._bloom_absorb(src, n_new)
-            self.store.write_table(
-                "blooms",
-                wave,
-                self.spark.createDataFrame(
-                    self.seen.prefilter_rows(), "bucket int, bits binary"
-                ),
+        _sub(
+            self.seen.commit_wave(
+                self.store, wave, n_new, self.n_enqueued, self._nfiles(n_cand)
             )
-
-        want_bloom = self.n_enqueued >= self.seen.bloom_min_keys
-        if want_bloom and self._bloom_ready:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                f_seen = ex.submit(_write_seen)
-                f_bloom = ex.submit(_update_bloom)
-                f_seen.result()
-                f_bloom.result()
-            _sub("seen+bloom")
-        else:
-            _write_seen()
-            _sub("seen_write")
-            if want_bloom:  # first build folds the ENTIRE seen set
-                self.seen._keys = self.store.read_all_partitioned(
-                    "seen", wave, "url_key string, bucket int", ["url_key", "bucket"]
-                )
-                self._bloom_absorb(self.seen.keys, self.n_enqueued)
-                self.store.write_table(
-                    "blooms",
-                    wave,
-                    self.spark.createDataFrame(
-                        self.seen.prefilter_rows(), "bucket int, bits binary"
-                    ),
-                )
-        # parquet-backed seen keys: cut lineage, one scan over committed waves
-        self.seen._keys = self.store.read_all_partitioned(
-            "seen", wave, "url_key string, bucket int", ["url_key", "bucket"]
         )
-        _sub("tail")
         return n_new
-
-    def _bloom_absorb(self, src: DataFrame, slice_rows: int) -> None:
-        """Fold a key slice into the prefilter (bloom or cuckoo arm — the
-        driver-vs-distributed build cutoff and blob merge live behind
-        SeenSet.absorb). Shared by the per-wave path, external seeding,
-        and resume."""
-        self.seen.absorb(src, slice_rows)
-        self._bloom_ready = True
 
     @staticmethod
     def _nfiles(n_rows: int) -> int:

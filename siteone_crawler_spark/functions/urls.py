@@ -85,80 +85,6 @@ def is_href_valid(href: str) -> bool:
     return True
 
 
-def href_cheap_invalid_col(href_col):
-    """Cheap NATIVE under-approximation of href invalidity — the hot-path
-    pre-filter. String ops only (startswith/contains/trim/lower, no regex):
-    ~1-2us/row, vs ~58us/row measured for the exact-replica regex chain
-    (href_valid_col), which cost 2.6x the ENTIRE wave when used as the
-    filter even on a 47%-invalid corpus.
-
-    Contract (property-pinned, tests/test_urls.py): may return true ONLY
-    for hrefs the Python kernel would reject after normalize_href —
-    false means "let the kernel decide", never "valid". Each branch is
-    safe against normalization: edge whitespace/quote stripping and
-    &amp;/&#38; decoding can neither create nor remove a leading '#', a
-    '{'/'<' anywhere, or a leading junk scheme; F.trim('')-emptiness is a
-    subset of Python strip()-emptiness. Deliberately NOT covered (kernel
-    handles them): quoted/whitespace-wrapped junk, exotic schemes, '&#'
-    template residue ('&#38;' decodes to a legal '&')."""
-    s = F.coalesce(href_col, F.lit(""))
-    low = F.lower(s)
-    return (
-        (F.trim(s) == "")
-        | s.startswith("#")
-        | s.contains("{")
-        | s.contains("<")
-        | low.startswith("mailto:")
-        | low.startswith("javascript:")
-        | low.startswith("data:")
-        | low.startswith("tel:")
-    )
-
-
-def href_valid_col(href_col):
-    """Native (Catalyst) replica of `is_href_valid(normalize_href(href))` —
-    used by the engine to drop definitely-invalid candidates BEFORE the
-    repartition + Arrow exchange, so fragment-only links, mailto:/
-    javascript:/data: schemes and template garbage (often 5-15% of extracted
-    hrefs on real pages) never pay the shuffle or the Python kernel.
-
-    Exact-parity with the Python kernel is pinned by a property test over a
-    curated + fuzz corpus (tests/test_urls.py); rows passing this predicate
-    still run the full kernel, so this is a pure short-circuit, never a
-    semantic fork.
-    """
-    # normalize_href: strip -> strip quote runs -> strip -> entity decode
-    # (&amp;/&#38; only) -> drop \t\n\r.  Python str.strip() strips the full
-    # Unicode-whitespace set (incl. \x0b \x0c \x1c-\x1f \x85 \xa0 u1680
-    # u2000-u200a u2028 u2029 u202f u205f u3000), while F.trim strips only
-    # ' ' — so edge-stripping uses an explicit character class enumerating
-    # exactly the codepoints where Python's str.isspace() is True.
-    # normalize_href's ' '->'%20' step is deliberately skipped: neither side
-    # of that rewrite can flip any validity predicate (none of '', '#', '{',
-    # '<', '&#' nor the scheme regex distinguishes ' ' from '%20' — both
-    # break a scheme match at the same position and neither contains a
-    # rejected substring).
-    pyws = "\t\n\x0b\f\r\x1c-\x1f \x85\xa0  -     　"
-    strip_re = f"^[{pyws}]+|[{pyws}]+$"
-    s = F.regexp_replace(F.coalesce(href_col, F.lit("")), strip_re, "")
-    s = F.regexp_replace(s, r"^[\"']+|[\"']+$", "")
-    s = F.regexp_replace(s, strip_re, "")
-    s = F.replace(s, F.lit("&amp;"), F.lit("&"))
-    s = F.replace(s, F.lit("&#38;"), F.lit("&"))
-    s = F.regexp_replace(s, r"[\t\n\r]", "")
-    nonhttp_scheme = s.rlike(r"^[a-zA-Z][a-zA-Z0-9+.\-]*:") & ~s.rlike(
-        r"^(?i)https?:"
-    )
-    return (
-        (s != "")
-        & ~s.startswith("#")
-        & ~s.contains("{")
-        & ~s.contains("<")
-        & ~s.contains("&#")
-        & ~nonhttp_scheme
-    )
-
-
 _ABS_HTTP_RE = re.compile(r"^https?://", re.IGNORECASE)
 
 

@@ -1,4 +1,5 @@
-"""The URL-seen set: bucketed exact store + per-bucket Bloom prefilter.
+"""The URL-seen set: bucketed exact store + per-bucket prefilter, and the
+checkpointed lifecycle of both.
 
 Scale story (the reference's DashMap keyed by MD5(url),
 /root/reference/src/engine/crawler.rs:96-103, becomes):
@@ -19,6 +20,15 @@ Scale story (the reference's DashMap keyed by MD5(url),
     each bucket's filter fits executor memory (e.g. B=65536, 2.4M keys and
     ~4.8 MB of bits per bucket). Locally we default small.
 
+Lifecycle: SeenSet alone owns its two checkpoint tables and decides when the
+prefilter goes live (`bloom_min_keys`). The crawl engine makes one call per
+event — `install` (external wave-0 frontier), `commit_wave` (after each
+frontier write) and `restore` (resume) — and SeenSet tracks whether its
+prefilter covers every key, so `filter_new` never trusts a partial filter.
+
+    seen/wave=K/bucket=B/   url_key of the keys enqueued at frontier wave K
+    blooms/wave=K/          (bucket, bits) prefilter snapshot after wave K
+
 Bloom hash scheme: the url_key is already an md5 hex digest; h1/h2 are its
 two 64-bit halves and probe i = (h1 + i*h2) mod m — deterministic, vectorized
 with numpy inside Arrow batches.
@@ -34,10 +44,13 @@ from pyspark.sql import functions as F
 
 # key-slice size above which Bloom bitsets are built DISTRIBUTED (per-bucket
 # applyInPandas, build_bloom_blobs) instead of a single-threaded driver-pandas
-# hash pass — the one cutoff shared by SeenSet.add and the engine's per-wave
-# _bloom_absorb (engine.py), pinned equivalent by test_seen_ordering's
-# builder-path test
+# hash pass — the one cutoff behind SeenSet.absorb, which every prefilter
+# build goes through (add, install, per-wave commit, resume), pinned
+# equivalent by test_seen_ordering's builder-path test
 DRIVER_BLOOM_BUILD_MAX_KEYS = 250_000
+
+KEYS_SCHEMA = "url_key string, bucket int"
+PREFILTER_SCHEMA = "bucket int, bits binary"
 
 
 def key_bucket(url_key_col, n_buckets: int):
@@ -143,8 +156,8 @@ class SeenSet:
         same no-false-negative contract PLUS deletion, so a recrawl/
         invalidation pipeline can make URLs schedulable again without a
         rebuild.
-    Both serialize as (bucket int, bits binary) rows, so the engine's
-    checkpoint table, absorb path, and filter_new plan are arm-agnostic.
+    Both serialize as (bucket int, bits binary) rows, so the checkpoint
+    table, absorb path, and filter_new plan are arm-agnostic.
     """
 
     def __init__(
@@ -167,16 +180,9 @@ class SeenSet:
         else:
             raise ValueError(f"unknown seen-filter kind: {kind!r}")
         self._keys: DataFrame | None = None  # columns: url_key, bucket
-
-    @property
-    def bloom(self):
-        """Back-compat alias for the prefilter state (bloom was the only arm
-        before the cuckoo one landed; engine/tests address the facade)."""
-        return self.prefilter
-
-    @bloom.setter
-    def bloom(self, state) -> None:
-        self.prefilter = state
+        # whether the prefilter holds every key of the set (vacuously true
+        # while empty); filter_new takes the prefilter path only when it does
+        self.prefilter_covers_keys = True
 
     # ---------------------------------------------- arm-agnostic operations
     def absorb(self, src: DataFrame, slice_rows: int) -> None:
@@ -184,8 +190,7 @@ class SeenSet:
         build while the slice is modest (a single-threaded pandas hash pass
         is cheaper than a Spark stage); distributed per-bucket build above
         the cutoff — a 10^10-key seen set must never toPandas through the
-        driver. Shared by the engine's per-wave path, external seeding,
-        resume, and SeenSet.add."""
+        driver."""
         if slice_rows < DRIVER_BLOOM_BUILD_MAX_KEYS:
             self.prefilter.add_keys(src.select("url_key", "bucket").toPandas())
         elif self.kind == "bloom":
@@ -224,11 +229,123 @@ class SeenSet:
         if self.kind == "cuckoo":
             self.prefilter.delete_keys(kb.toPandas())
 
-    def prefilter_rows(self) -> list[tuple[int, bytes]]:
-        """(bucket, blob) checkpoint rows — same schema for both arms."""
-        return self.prefilter.to_rows()
+    @property
+    def keys(self) -> DataFrame:
+        if self._keys is None:
+            self._keys = self.spark.createDataFrame([], KEYS_SCHEMA)
+        return self._keys
 
-    def restore_prefilter(self, rows: list[tuple[int, bytes]]) -> None:
+    def add(self, new_keys: DataFrame, n_keys: int | None = None) -> None:
+        """new_keys: DataFrame with url_key column (assumed distinct, unseen).
+        The slice always folds into the prefilter (pass n_keys to skip the
+        sizing count that picks the driver or distributed build)."""
+        kb = new_keys.select(
+            "url_key", key_bucket(F.col("url_key"), self.n_buckets).alias("bucket")
+        )
+        n = n_keys if n_keys is not None else kb.count()
+        self.absorb(kb, n)
+        self._keys = self.keys.unionByName(kb)
+
+    # ------------------------------------------- checkpointed lifecycle
+    def install(self, store, n_keys: int) -> None:
+        """Take the seen set from an externally written frontier wave 0
+        (n_keys rows). The prefilter is built here when the set is already
+        past bloom_min_keys; its first snapshot lands with the next wave."""
+        self._write_keys(store, 0, max_files=32)
+        self._load_keys(store, 0)
+        self.prefilter_covers_keys = n_keys == 0
+        if n_keys >= self.bloom_min_keys:
+            self._fold_all(n_keys)
+
+    def commit_wave(
+        self, store, wave: int, n_new: int, n_seen: int, max_files: int
+    ) -> str:
+        """Fold frontier wave `wave` (n_new keys, n_seen in total after it)
+        into the checkpointed set. Returns which path ran ("seen+bloom" or
+        "seen_write"), the engine's sub-timing label.
+
+        Prefilter maintenance starts only once the set is big enough to pay
+        for it (below that, filter_new broadcast-anti-joins the exact keys);
+        the first build folds EVERY key. Once live, the wave's key slice
+        comes from the frontier parquet, independent of the seen write, so
+        the two run as CONCURRENT jobs — the build stays off the wave's
+        serial tail."""
+        live = n_seen >= self.bloom_min_keys
+        if live and self.prefilter_covers_keys:
+            from concurrent.futures import ThreadPoolExecutor
+
+            def update_prefilter():
+                self.absorb(self._wave_keys(store, wave), n_new)
+                self._write_prefilter(store, wave)
+
+            with ThreadPoolExecutor(max_workers=2) as ex:
+                f_seen = ex.submit(self._write_keys, store, wave, max_files)
+                f_pre = ex.submit(update_prefilter)
+                f_seen.result()
+                f_pre.result()
+            self._load_keys(store, wave)
+            return "seen+bloom"
+        self._write_keys(store, wave, max_files)
+        self._load_keys(store, wave)
+        if live:
+            self._fold_all(n_seen)
+            self._write_prefilter(store, wave)
+        elif n_new:
+            self.prefilter_covers_keys = False
+        return "seen_write"
+
+    def restore(self, store, wave: int) -> int:
+        """Resume from the checkpoint: keys of seen waves 0..wave, and the
+        prefilter from its wave snapshot — or rebuilt from the keys when the
+        set crossed bloom_min_keys without one. Returns the key count."""
+        self._load_keys(store, wave)
+        n = self.keys.count()
+        rows = store.read_wave("blooms", wave, PREFILTER_SCHEMA).collect()
+        if rows:
+            self._load_prefilter([(r["bucket"], r["bits"]) for r in rows])
+            self.prefilter_covers_keys = True
+        elif n >= self.bloom_min_keys:
+            self._fold_all(n)
+        else:
+            self.prefilter_covers_keys = n == 0
+        return n
+
+    def _wave_keys(self, store, wave: int) -> DataFrame:
+        return store.read_wave("frontier", wave, "url_key string").select(
+            "url_key", key_bucket(F.col("url_key"), self.n_buckets).alias("bucket")
+        )
+
+    def _write_keys(self, store, wave: int, max_files: int) -> None:
+        # PARTITIONED BY bucket on disk: the exact anti-join side
+        # partition-prunes and never recomputes the bucket hash; derived
+        # from the just-written frontier parquet, so its lineage is one scan
+        store.write_table(
+            "seen", wave, self._wave_keys(store, wave),
+            max_files=max_files, partition_by="bucket",
+        )
+
+    def _load_keys(self, store, wave: int) -> None:
+        # parquet-backed keys: cut lineage, one scan over committed waves
+        self._keys = store.read_all_partitioned(
+            "seen", wave, KEYS_SCHEMA, ["url_key", "bucket"]
+        )
+
+    def _write_prefilter(self, store, wave: int) -> None:
+        store.write_table(
+            "blooms", wave,
+            self.spark.createDataFrame(self.prefilter.to_rows(), PREFILTER_SCHEMA),
+        )
+
+    def _fold_all(self, n_keys: int) -> None:
+        """Rebuild the prefilter from every key of the set (a fresh state:
+        re-inserting keys a cuckoo table already holds would duplicate
+        their fingerprints)."""
+        self._load_prefilter([])
+        self.absorb(self.keys, n_keys)
+        self.prefilter_covers_keys = True
+
+    def _load_prefilter(self, rows: list[tuple[int, bytes]]) -> None:
+        """Replace the prefilter with the state serialized in `rows`."""
         if self.kind == "bloom":
             self.prefilter = BloomState.from_rows(
                 rows, self.n_buckets, self.prefilter.m, self.prefilter.k
@@ -239,29 +356,6 @@ class SeenSet:
             self.prefilter = CuckooState.from_rows(
                 rows, self.n_buckets, self.prefilter.m
             )
-
-    @property
-    def keys(self) -> DataFrame:
-        if self._keys is None:
-            self._keys = self.spark.createDataFrame([], "url_key string, bucket int")
-        return self._keys
-
-    def count(self) -> int:
-        return self.keys.count() if self._keys is not None else 0
-
-    def add(self, new_keys: DataFrame, n_keys: int | None = None) -> None:
-        """new_keys: DataFrame with url_key column (assumed distinct, unseen).
-        Driver-side bloom build only while the slice is modest; the
-        distributed per-bucket builder above that (pass n_keys to skip the
-        sizing count). Same cutoff as the engine's per-wave _bloom_absorb —
-        one constant repo-wide (test_seen_ordering pins builder-path
-        equivalence)."""
-        kb = new_keys.select(
-            "url_key", key_bucket(F.col("url_key"), self.n_buckets).alias("bucket")
-        )
-        n = n_keys if n_keys is not None else kb.count()
-        self.absorb(kb, n)
-        self._keys = self.keys.unionByName(kb)
 
     # below this many seen keys the bloom prefilter costs more (one extra
     # Python stage per wave + the bitset build) than the broadcast anti-join
@@ -274,8 +368,10 @@ class SeenSet:
     ) -> DataFrame:
         """Return candidates whose key is NOT in the seen set.
 
-        Bloom-negative rows skip the join; only maybe-seen rows anti-join the
-        exact table (pre-pruned to the candidate buckets).
+        `n_seen` is the set's size when the caller knows it (None: unknown).
+        Prefilter-negative rows skip the join; only maybe-seen rows anti-join
+        the exact table (pre-pruned to the candidate buckets). A prefilter
+        that does not cover every key is never consulted.
         """
         spark = self.spark
         if n_seen is not None and n_seen == 0:
@@ -287,10 +383,12 @@ class SeenSet:
                 how="left_anti",
             )
         cand = candidates.withColumn("__bucket", key_bucket(F.col(key_col), self.n_buckets))
+        if not self.prefilter_covers_keys:
+            return self._exact_anti_join(cand, key_col, n_seen).drop("__bucket")
         bc = spark.sparkContext.broadcast(
             {
                 "kind": self.kind,
-                "rows": self.prefilter_rows(),
+                "rows": self.prefilter.to_rows(),
                 "m": self.prefilter.m,
                 "k": getattr(self.prefilter, "k", None),
                 "B": self.n_buckets,
@@ -311,23 +409,29 @@ class SeenSet:
 
         cand = cand.withColumn("__maybe", maybe_seen(F.col(key_col), F.col("__bucket")))
         definite_new = cand.filter(~F.col("__maybe"))
-        maybe = cand.filter(F.col("__maybe"))
         # exact anti-join only for the maybe slice
+        survivors = self._exact_anti_join(
+            cand.filter(F.col("__maybe")), key_col, n_seen
+        )
+        return definite_new.unionByName(survivors).drop("__bucket", "__maybe")
+
+    def _exact_anti_join(
+        self, cand: DataFrame, key_col: str, n_seen: int | None
+    ) -> DataFrame:
+        """Anti-join candidates (carrying __bucket) against the exact keys."""
         seen_pruned = self.keys.withColumnRenamed("url_key", key_col)
         if self._small(n_seen):
-            survivors = maybe.join(
+            return cand.join(
                 F.broadcast(seen_pruned.select(key_col)), on=[key_col], how="left_anti"
             )
-        else:
-            # co-key on (bucket, key): the seen table is bucket-partitioned
-            # on disk, so the scan prunes to touched buckets and both sides
-            # hash identically in the shuffle
-            survivors = maybe.join(
-                seen_pruned.withColumnRenamed("bucket", "__bucket"),
-                on=[key_col, "__bucket"],
-                how="left_anti",
-            )
-        return definite_new.unionByName(survivors).drop("__bucket", "__maybe")
+        # co-key on (bucket, key): the seen table is bucket-partitioned on
+        # disk, so the scan prunes to touched buckets and both sides hash
+        # identically in the shuffle
+        return cand.join(
+            seen_pruned.withColumnRenamed("bucket", "__bucket"),
+            on=[key_col, "__bucket"],
+            how="left_anti",
+        )
 
     # keys above which the exact side must NOT be broadcast: ~32-char md5
     # keys, ~5M rows ≈ 300MB of broadcast payload is the ceiling; beyond it

@@ -12,8 +12,11 @@ capability the north rule adds.
 
 Layout:
     root/manifest.json                  {"last_wave": K, "done": bool, ...}
-    root/<table>/wave=K/part-*.parquet  per-wave appends (frontier, visited,
-                                        skipped, events, metrics, blooms)
+    root/<table>/wave=K/part-*.parquet  per-wave appends (frontier, deferred,
+                                        visited, skipped, basename_events,
+                                        metrics, lineage; the seen set's
+                                        seen and blooms, operators/seen.py)
+    root/seen/wave=K/bucket=B/...       hive-partitioned by bucket
 
 A wave K is visible iff manifest.last_wave >= K, so a crash between table
 writes and the manifest bump simply replays wave K on resume — writes are
@@ -26,9 +29,6 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-TABLES = ("frontier", "seen", "visited", "skipped", "events", "metrics", "blooms")
-
 
 class CheckpointStore:
     def __init__(self, spark: SparkSession, root: str):

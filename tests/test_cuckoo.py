@@ -6,6 +6,7 @@ plus the cuckoo-only property — deletion — and serialization/builder
 equivalence."""
 
 import hashlib
+import shutil
 
 import numpy as np
 import pytest
@@ -241,31 +242,64 @@ def test_engine_cuckoo_arm_crawl_parity(spark, tmp_path):
         assert a == b, f"table {t} differs between seen-filter arms"
 
 
-def test_engine_cuckoo_arm_resume(spark, tmp_path):
-    """Kill-and-resume with the cuckoo arm restores the prefilter from the
-    checkpointed blobs (same 'blooms' table schema) bit-identically."""
+@pytest.fixture(scope="module")
+def resume_case(spark, tmp_path_factory):
+    """Inputs of the resume tests: the uninterrupted crawl's sorted
+    visited/frontier/skipped rows, and a checkpoint killed after one wave.
+    Both crawl with the default bloom_min_keys, which the site never
+    reaches, so no prefilter exists yet and the killed checkpoint serves
+    both arms."""
     from siteone_crawler_spark.config import CrawlConfig
-    from siteone_crawler_spark.engine import CrawlEngine
-    from siteone_crawler_spark.generator import generate_site, site_to_dfs
+    from siteone_crawler_spark.generator import generate_site
 
     site = generate_site(seed=3, n_hosts=2, docs_per_host=15)
-    cfg = CrawlConfig(allowed_domains=("*.example.test",), seen_filter="cuckoo")
-
-    _, full = _crawl_tables(spark, site, cfg, tmp_path / "full", min_keys=1)
-
-    docs, meta, _r, _s = site_to_dfs(spark, site)
-    e1 = CrawlEngine(spark, cfg, str(tmp_path / "part"), n_buckets=8)
-    e1.seen.bloom_min_keys = 1
-    e1.run(docs, meta, site.robots, site.seeds, max_waves=2)
+    cfg = CrawlConfig(allowed_domains=("*.example.test",))
+    _, full = _crawl_tables(spark, site, cfg, tmp_path_factory.mktemp("full"))
+    killed = tmp_path_factory.mktemp("killed")
+    e1, _ = _crawl_tables(spark, site, cfg, killed, max_waves=1)
     assert not e1.store.read_manifest()["done"]
-    e2 = CrawlEngine(spark, cfg, str(tmp_path / "part"), n_buckets=8)
-    e2.seen.bloom_min_keys = 1
-    resumed = e2.run(docs, meta, site.robots, site.seeds)
-    assert e2.store.read_manifest()["done"]
-    from siteone_crawler_spark.operators.cuckoo import CuckooState
+    return {
+        "site": site,
+        "want": {
+            t: sorted(map(tuple, full[t].collect()))
+            for t in ("visited", "frontier", "skipped")
+        },
+        "killed": killed,
+        "n_at_kill": e1.n_enqueued,
+    }
 
-    assert isinstance(e2.seen.prefilter, CuckooState)
-    for t in ("visited", "frontier", "skipped"):
-        a = sorted(map(tuple, full[t].collect()))
-        b = sorted(map(tuple, resumed[t].collect()))
-        assert a == b, f"table {t} differs after cuckoo-arm resume"
+
+@pytest.mark.parametrize("arm", ["bloom", "cuckoo"])
+def test_engine_prefilter_resume(spark, tmp_path, resume_case, arm):
+    """Kill-and-resume with the prefilter must be bit-identical to an
+    uninterrupted crawl through every branch of SeenSet.restore. The killed
+    crawl resumes four times, each engine life with its own bloom_min_keys:
+      1. not live on restore (exact path), crossed in its wave: first full
+         fold and first 'blooms' snapshot;
+      2. restored from that snapshot and probed through it;
+      3. snapshot restored, threshold out of reach: no new snapshot;
+      4. no snapshot at the last wave: rebuilt from the seen keys, crawl
+         runs to the end."""
+    from siteone_crawler_spark.config import CrawlConfig
+    from siteone_crawler_spark.operators.seen import BloomState
+
+    ck = tmp_path / "ckpt"
+    shutil.copytree(resume_case["killed"], ck)
+    cfg = CrawlConfig(allowed_domains=("*.example.test",), seen_filter=arm)
+    lives = [
+        (resume_case["n_at_kill"] + 1, 1, True),
+        (1, 1, True),
+        (10**9, 1, False),
+        (1, None, True),
+    ]
+    for min_keys, max_waves, snapshot in lives:
+        eng, tables = _crawl_tables(
+            spark, resume_case["site"], cfg, ck, min_keys, max_waves
+        )
+        assert eng.store.read_manifest()["done"] == (max_waves is None)
+        assert eng.store.has_wave("blooms", tables["last_wave"] + 1) == snapshot
+        assert eng.seen.prefilter_covers_keys == snapshot
+    assert isinstance(eng.seen.prefilter, BloomState if arm == "bloom" else CuckooState)
+    for t, want in resume_case["want"].items():
+        got = sorted(map(tuple, tables[t].collect()))
+        assert got == want, f"table {t} differs after {arm}-arm resume"

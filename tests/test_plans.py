@@ -55,7 +55,7 @@ def test_seen_exact_side_not_broadcast_above_threshold(spark):
     # above the bloom threshold AND the broadcast ceiling there is no FORCED
     # broadcast hint — with auto-broadcast off (as cost stats would dictate
     # at 10^10 keys) the exact anti-join must plan as a shuffle join
-    seen.bloom.add_keys(seen._keys.toPandas())
+    seen.prefilter.add_keys(seen._keys.toPandas())
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

@@ -34,7 +34,7 @@ def test_seen_filter_new_bloom_and_exact_paths(spark):
         [(f"{i:032x}",) for i in range(200)], "url_key string"
     )
     seen._keys = keys.withColumn("bucket", key_bucket(F.col("url_key"), 4))
-    seen.bloom.add_keys(seen._keys.toPandas())
+    seen.prefilter.add_keys(seen._keys.toPandas())
 
     cands = spark.createDataFrame(
         [(f"{i:032x}",) for i in range(150, 300)], "url_key string"
